@@ -1,6 +1,6 @@
 package graft.wilayah
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The five query entry points of the reference service, over the
@@ -12,8 +12,7 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
   def warehouse: DataFrame =
     Store.load(spark, warehousePath)
       .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.Encoders.product[Wilayah].schema))
+        spark.sparkContext.emptyRDD[Row], Store.schema))
 
   /** Warehouse health summary: per-level counts, duplicate-key count
     * (must be 0 — the PK invariant the merge maintains), and row total.
@@ -169,32 +168,50 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
     case _ => Seq.empty
   }
 
-  /** The 2-4 per-level fetches are independent — run them as
-    * concurrent Spark jobs (the reference awaits them sequentially,
-    * /root/reference/server.js:429-476).
+  /** The 2-4 planned fetches (the reference awaits them one after
+    * another, /root/reference/server.js:429-476) as ONE Spark job: the
+    * warehouse is scanned once under the OR of the plan's
+    * `(level, prefix)` pairs, the Feature JSON of every matching row is
+    * collected, and the driver deals the rows into their slots. Every
+    * planned slot is present; one with no rows is an empty
+    * FeatureCollection. Each slot holds exactly the rows of
+    * `byLevel(level, Some(prefix))`.
     */
   def geojson(code: String): Map[String, String] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = geojsonPlan(code).map { case (slot, level, prefix) =>
-      Future(slot -> featureCollection(byLevel(level, Some(prefix))))
-    }
-    Await.result(Future.sequence(futures), Duration.Inf).toMap
+    val plan = geojsonPlan(code)
+    val rows =
+      if (plan.isEmpty) Array.empty[Row]
+      else featureJson(
+        warehouse
+          .filter(plan.map { case (_, level, prefix) =>
+            col("level") === level && col(Store.Key).startsWith(prefix)
+          }.reduce(_ || _))
+          .select(col("level"), col(Store.Key).as("id"),
+            col("nama_wilayah_kemendagri").as("name"), col("geometry")),
+        col("level"), col("id")).collect()
+    plan.map { case (slot, level, prefix) =>
+      slot -> collectionJson(rows.iterator
+        .filter(r => r.getInt(0) == level && r.getString(1).startsWith(prefix))
+        .map(_.getString(2)))
+    }.toMap
   }
 
   /** Per-row Feature JSON — the distributed part of the
-    * FeatureCollection assembly. Geometry re-parses from its stored
-    * text via from_json — the mirror of the reference's string re-parse
-    * at server.js:491-497.
+    * FeatureCollection assembly, after the `keep` columns. Geometry
+    * re-parses from its stored text via from_json — the mirror of the
+    * reference's string re-parse at server.js:491-497.
     */
-  private def featureJson(rows: DataFrame): DataFrame =
-    rows.select(
+  private def featureJson(rows: DataFrame, keep: Column*): DataFrame =
+    rows.select(keep :+
       to_json(struct(
         lit("Feature").as("type"),
         struct(col("name"), col("id")).as("properties"),
         from_json(col("geometry"), Model.geometryType).as("geometry")))
-        .as("feature"))
+        .as("feature"): _*)
+
+  /** Feature JSON strings -> one FeatureCollection body. */
+  private def collectionJson(features: Iterator[String]): String =
+    features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
 
   /** FeatureCollection assembly (/root/reference/server.js:486-506):
     * rows -> {type, features:[{type, properties:{name,id}, geometry}]}.
@@ -206,15 +223,8 @@ class Api(spark: SparkSession, warehousePath: String, geojsonDir: String) {
     * driver).
     */
   def featureCollection(rows: DataFrame): String = {
-    val sb = new java.lang.StringBuilder("""{"type":"FeatureCollection","features":[""")
-    val it = featureJson(rows).toLocalIterator()
-    var first = true
-    while (it.hasNext) {
-      if (!first) sb.append(',')
-      sb.append(it.next().getString(0))
-      first = false
-    }
-    sb.append("]}").toString
+    import scala.jdk.CollectionConverters._
+    collectionJson(featureJson(rows).toLocalIterator().asScala.map(_.getString(0)))
   }
 
   /** Bulk export path: each Feature as one JSON line, written directly

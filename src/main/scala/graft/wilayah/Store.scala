@@ -1,8 +1,9 @@
 package graft.wilayah
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Warehouse + keyed upsert (MERGE) over Parquet — the Spark
   * re-expression of the reference's row-at-a-time
@@ -23,9 +24,26 @@ object Store {
     "kode_wilayah_kemendagri", "nama_wilayah_kemendagri",
     "level", "geometry", "created_at", "updated_at")
 
+  /** The warehouse row as a read returns it: the [[Wilayah]] fields
+    * with the partition column `level` last, where partition discovery
+    * puts it.
+    */
+  val schema: StructType = {
+    val fields = Encoders.product[Wilayah].schema.fields
+    StructType(fields.filterNot(_.name == "level") ++ fields.filter(_.name == "level"))
+  }
+
+  /** The warehouse as a DataFrame, read with the declared [[schema]].
+    * Inferring the schema instead reads the Parquet footers in one
+    * Spark job per load, and every `Api` read loads: on a small
+    * warehouse that job costs more than the answer. The declared schema
+    * also keeps a warehouse directory with no data files readable (a
+    * sync whose features were all quarantined leaves one), where
+    * inference fails with UNABLE_TO_INFER_SCHEMA.
+    */
   def load(spark: SparkSession, warehousePath: String): Option[DataFrame] =
     if (new java.io.File(warehousePath).exists())
-      Some(spark.read.parquet(warehousePath))
+      Some(spark.read.schema(schema).parquet(warehousePath))
     else None
 
   /** Last-writer-wins merge: for each key keep the newest row by
